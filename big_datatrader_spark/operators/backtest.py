@@ -1,13 +1,13 @@
 """Backtest pipelines — the reference's three "queries" (SURVEY.md §2.12).
 
 1. Evenly Spaced Buys (reference main.py:366-390): fully relational here —
-   stride signals -> ordered limit -> share expression -> aggregate. The
-   reference's per-row ``dask.delayed`` variant ("Parallel Delayed
-   Trades", main.py:448-486) computes the identical result; its per-row
-   task graph dissolves into the column expression ``per_trade / close``,
-   so both strategies are THIS function (partition-count invariance is
-   asserted in tests, porting the reference's own benchmark oracle,
-   main.py:600-618).
+   one window pass (row number, series length) -> stride arithmetic ->
+   conditional per-symbol aggregate. The reference's per-row
+   ``dask.delayed`` variant ("Parallel Delayed Trades", main.py:448-486)
+   computes the identical result; its per-row task graph dissolves into
+   the column expression ``per_trade / close``, so both strategies are
+   THIS function (partition-count invariance is asserted in tests,
+   porting the reference's own benchmark oracle, main.py:600-618).
 
 2. Moving Average Crossover (reference main.py:392-446): a sequential
    stateful fold — trade i depends on the budget left by trades < i, so
@@ -26,9 +26,10 @@ from __future__ import annotations
 
 from typing import Sequence
 
+import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from .signals import with_stride_signals
 
@@ -65,39 +66,27 @@ def evenly_spaced_backtest(df: DataFrame, *,
     Output: symbol, n_buys, trades_executed, total_invested, sum_shares,
     final_price, final_value, roi — one row per symbol.
     """
+    ocols = _as_order_cols(order_col)
+    # k = min(n_buys, eff_max, cap) and a buy's index never exceeds
+    # n_buys, so "taken" is just index <= min(eff_max, cap)
     eff_max = int(max_trades) if max_trades is not None \
         else int(budget // per_trade)
-    cap = int(budget // per_trade)
-    ocols = _as_order_cols(order_col)
+    limit = min(eff_max, int(budget // per_trade))
 
-    sig = with_stride_signals(df, [symbol_col], ocols,
-                              max_trades=max_trades)
+    # ONE window pass over ONE scan: the stride signals carry each
+    # row's 1-based rn and the series' step, which give every buy's
+    # index arithmetically; the grouped aggregate below reuses the
+    # window's hash partitioning by symbol — one exchange, no second
+    # scan of the series for its last price, no join.
+    sig = with_stride_signals(df.select(symbol_col, *ocols, price_col),
+                              [symbol_col], ocols, max_trades=max_trades)
+    buy = F.col("buy_signal")
+    taken = buy & (F.expr("(rn - 1) div step") < F.lit(limit))
+    n_taken = F.count(F.when(taken, 1))
 
-    w_buy = Window.partitionBy(symbol_col).orderBy(*ocols)
-    w_all = (Window.partitionBy(symbol_col).orderBy(*ocols)
-             .rowsBetween(Window.unboundedPreceding,
-                          Window.unboundedFollowing))
-    buys = (
-        sig.filter(F.col("buy_signal"))
-        .withColumn("buy_rn", F.row_number().over(w_buy))
-        .withColumn("n_buys", F.count(F.lit(1)).over(w_all))
-        .withColumn("k", F.least(F.col("n_buys"),
-                                 F.lit(eff_max), F.lit(cap)))
-    )
-    taken = buys.filter(F.col("buy_rn") <= F.col("k"))
-    # try_divide: a zero price yields NULL (skipped by sum) on BOTH Spark
-    # and DuckDB — ANSI Spark would throw instead. (The pandas reference
-    # would produce inf here; divergence only for worthless assets.)
-    per_symbol_buys = taken.groupBy(symbol_col).agg(
-        F.sum(F.try_divide(F.lit(per_trade), F.col(price_col)))
-         .alias("sum_shares"),
-        F.count(F.lit(1)).alias("trades_executed"),
-        F.max("n_buys").alias("n_buys"),
-    )
     # last price of the FULL series (reference main.py:383 uses gdf, the
-    # unfiltered frame) — a single hash aggregate, no extra window pass.
-    # Composite order keys use a lexicographic struct max (DuckDB's
-    # max_by has no struct key, so the oracle twin is
+    # unfiltered frame). Composite order keys use a lexicographic struct
+    # max (DuckDB's max_by has no struct key, so the oracle twin is
     # (max({..., 'p': price})).p — field-order comparison on both).
     if len(ocols) == 1:
         last_price = F.max_by(F.col(price_col), F.col(ocols[0]))
@@ -105,23 +94,26 @@ def evenly_spaced_backtest(df: DataFrame, *,
         last_price = F.max(F.struct(
             *[F.col(c) for c in ocols],
             F.col(price_col).alias("__p"))).getField("__p")
-    finals = df.groupBy(symbol_col).agg(last_price.alias("final_price"))
-
-    res = finals.join(per_symbol_buys, on=symbol_col, how="left")
-    invested = F.col("trades_executed") * F.lit(per_trade)
-    final_value = F.when(
-        F.col("trades_executed").isNull(), F.lit(float(budget))
-    ).otherwise(
-        (F.lit(float(budget)) - invested)
-        + F.col("sum_shares") * F.col("final_price")
+    # try_divide: a zero price yields NULL (skipped by sum) on BOTH Spark
+    # and DuckDB — ANSI Spark would throw instead. (The pandas reference
+    # would produce inf here; divergence only for worthless assets.)
+    # A symbol with nothing taken reports n_buys = trades_executed = 0
+    # and sum_shares = 0.0, so its final_value is the untouched budget.
+    res = sig.groupBy(symbol_col).agg(
+        F.when(n_taken > 0, F.count(F.when(buy, 1))).otherwise(0)
+         .alias("n_buys"),
+        n_taken.alias("trades_executed"),
+        F.coalesce(
+            F.sum(F.when(taken, F.try_divide(F.lit(per_trade),
+                                             F.col(price_col)))),
+            F.lit(0.0)).alias("sum_shares"),
+        last_price.alias("final_price"),
     )
+    invested = F.col("trades_executed") * F.lit(per_trade)
+    final_value = ((F.lit(float(budget)) - invested)
+                   + F.col("sum_shares") * F.col("final_price"))
     return (
-        res.withColumn("n_buys", F.coalesce("n_buys", F.lit(0)))
-        .withColumn("trades_executed",
-                    F.coalesce("trades_executed", F.lit(0)))
-        .withColumn("total_invested",
-                    F.col("trades_executed") * F.lit(per_trade))
-        .withColumn("sum_shares", F.coalesce("sum_shares", F.lit(0.0)))
+        res.withColumn("total_invested", invested)
         .withColumn("final_value", final_value)
         .withColumn(
             "roi",
@@ -132,6 +124,19 @@ def evenly_spaced_backtest(df: DataFrame, *,
     )
 
 
+def _trailing_mean(x: np.ndarray, n: int) -> np.ndarray:
+    """Trailing n-row mean with min_periods=1, each window summed left
+    to right from 0.0 — the arithmetic of the window AVG over
+    ``rowsBetween(-(n-1), 0)`` that mode='compressed' uses. pandas'
+    ``rolling().mean()`` keeps a running sum instead, which rounds
+    differently: when the 5- and 20-bar means tie exactly in decimal,
+    the two can decide the crossover differently."""
+    acc = np.zeros(len(x))
+    for lag in range(n - 1, -1, -1):  # oldest term first
+        acc[lag:] += x[:max(len(x) - lag, 0)]
+    return acc / np.minimum(np.arange(1, len(x) + 1), n)
+
+
 def _crossover_fold(pdf: pd.DataFrame, price_col: str,
                     order_cols: list[str],
                     budget: float, per_trade: float,
@@ -140,13 +145,12 @@ def _crossover_fold(pdf: pd.DataFrame, price_col: str,
     (main.py:398-439): golden cross buys (budget-gated), death cross
     sells, forced close of an open position at the final price."""
     pdf = pdf.sort_values(order_cols).reset_index(drop=True)
-    close_s = pdf[price_col].astype("float64")
     # numpy views: the fold touches every row, and pandas scalar .iloc is
     # ~50x slower than ndarray indexing — this loop is the per-group hot
     # path at scale.
-    close = close_s.to_numpy()
-    short_ma = close_s.rolling(window=5, min_periods=1).mean().to_numpy()
-    long_ma = close_s.rolling(window=20, min_periods=1).mean().to_numpy()
+    close = pdf[price_col].astype("float64").to_numpy()
+    short_ma = _trailing_mean(close, 5)
+    long_ma = _trailing_mean(close, 20)
     times = pdf[order_cols[0]].to_numpy()
 
     cash = float(budget)
@@ -262,8 +266,9 @@ def ma_crossover_backtest(df: DataFrame, *,
     the difference between a fold over ~1% of the data and Arrow-
     shipping every tick.
     mode='full': the whole series goes to an exact pandas kernel
-    (rolling means computed in pandas) — the literal transcription of
-    the reference semantics, kept as the cross-validation baseline.
+    (rolling means summed left to right in numpy, as the window AVG
+    does) — the literal transcription of the reference semantics, kept
+    as the cross-validation baseline.
     """
     if emit not in ("summary", "positions"):
         raise ValueError("emit must be 'summary' or 'positions'")
@@ -388,19 +393,3 @@ def ma_crossover_backtest(df: DataFrame, *,
     return grouped_src.groupBy(symbol_col).applyInPandas(
         run, schema=out_schema)
 
-
-def partition_invariant(df_builder, partitions: Sequence[int] = (1, 2, 4, 8, 16)):
-    """Port of the reference's benchmark oracle (main.py:590-619): the
-    same query at several partition counts must agree. Returns the list
-    of (n_partitions, rows) for the caller to assert on."""
-    outs = []
-    for p in partitions:
-        rows = df_builder(p).collect()
-        outs.append((p, sorted(map(tuple, rows))))
-    return outs
-
-
-def shares_expression(per_trade: float, price_col: str = "close"):
-    """U1 (reference main.py:467-471): the per-row delayed task collapses
-    to a column expression."""
-    return F.try_divide(F.lit(float(per_trade)), F.col(price_col))

@@ -4636,17 +4636,16 @@ _LPH_TOPK = 20           # predictions scored per query node
         "algebra: a scoring or split regression changes a hit count "
         "and flips the driver hash. Scale: identical wedge-join "
         "discipline as the scorer (cost bounded by the query set, "
-        "never all-pairs). The r10 replan (VERDICT r9 ask #2): the "
-        "dated edge list is built EAGERLY exactly once and the train "
-        "split eagerly once from that cache, BEFORE any consumer is "
-        "planned — a deterministic build under its own AQE context "
-        "instead of interleaved with the wedge/scoring stages and "
-        "their memory pressure. Measured: 34.2s (r9) -> 15.0s (r10 "
-        "bench) at sf1 while sf0.1 ROSE ~2s (the eager builds' fixed "
-        "price) — opposite signs, so the win is plan-shaped, not "
-        "host drift; tools/measure_cache_race.py holds the mechanism "
-        "measurements. Both caches are released after the 50-row "
-        "result materializes (run_scoped)",
+        "never all-pairs). The dated edge list is built EAGERLY "
+        "exactly once (or leased from an open SharedScope), BEFORE any "
+        "consumer is planned — a deterministic build under its own "
+        "AQE context instead of interleaved with the wedge/scoring "
+        "stages and their memory pressure. The train and test splits "
+        "are lazy filter views over that cache (the r15 replan "
+        "dropped the eager train persist, which re-materialized ~91% "
+        "of the edges). The edge cache and the lazy query-node cache "
+        "are released after the 50-row result materializes "
+        "(run_scoped)",
     plan_fn=lambda spark, sf_dir, cache: _lph_plan(spark, sf_dir, cache),
 )
 def link_prediction_holdout_eval(spark, sf_dir):

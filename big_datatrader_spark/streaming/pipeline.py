@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from ..session import ensure_confs
+from ..sources.parquet_source import parquet_schema
 
 # Drain-time executed-plan capture: a streaming query's physical plan
 # only exists once a micro-batch has run, so the registry-wide plan
@@ -47,9 +48,9 @@ def _events_stream_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
     """Explicit source schema (a streaming source cannot infer). The
     driver testdata has stored ts as TIMESTAMP(NANOS) — surfacing as
     int64 ns under legacy.parquet.nanosAsLong — in some generations and
-    TIMESTAMP(MICROS) in others, so probe the footer once (driver-side
-    metadata read, same guard as sources/parquet_source.table)."""
-    probed = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    TIMESTAMP(MICROS) in others, so take ts's type from the footer
+    (the same cached resolver as sources/parquet_source.table)."""
+    probed = parquet_schema(spark, os.path.join(sf_dir, "events.parquet"))
     ts_type = next(f.dataType for f in probed.fields if f.name == "ts")
     return T.StructType([
         T.StructField("event_id", T.LongType(), True),

@@ -17,8 +17,8 @@ BUDGET, PER_TRADE = 10_000.0, 1_000.0
 # semantics; deliberately loop-based, not shared with the engine code) ---
 
 def golden_evenly_spaced(pdf: pd.DataFrame, budget, per_trade,
-                         max_trades=None):
-    pdf = pdf.sort_values("ts").reset_index(drop=True)
+                         max_trades=None, order=("ts",)):
+    pdf = pdf.sort_values(list(order)).reset_index(drop=True)
     n = len(pdf)
     if max_trades is not None:
         step = max(n // max_trades, 1)
@@ -30,7 +30,10 @@ def golden_evenly_spaced(pdf: pd.DataFrame, budget, per_trade,
     if buys.empty:
         return budget, 0.0
     k = min(len(buys), eff, int(budget // per_trade))
-    shares = (per_trade / buys["value"]).head(k).sum()
+    # a zero-price buy is executed but buys no shares (the engine's
+    # documented try_divide contract, shared with the DuckDB oracles)
+    prices = buys["value"].head(k)
+    shares = (per_trade / prices[prices != 0]).sum()
     final_price = pdf["value"].iloc[-1]
     final_value = (budget - k * per_trade) + shares * final_price
     roi = (final_value - budget) / budget * 100
@@ -95,6 +98,109 @@ def test_evenly_spaced_max_trades_matches_golden(ticks, ticks_pdf):
     for uid, g in ticks_pdf.groupby("user_id"):
         fv, _ = golden_evenly_spaced(g, BUDGET, PER_TRADE, max_trades=5)
         assert got[uid] == pytest.approx(fv, rel=1e-12), uid
+
+
+def _series(uid, prices):
+    return [(uid, t, t, p) for t, p in enumerate(prices)]
+
+
+_ZERO_PRICED = [5.0 + i for i in range(25)]
+_ZERO_PRICED[10] = 0.0  # the second buy
+
+# name -> ((user_id, ts, event_id, value) rows, backtest kwargs,
+#          expected (n_buys, trades_executed) of every symbol)
+_EVENLY_EDGE_CASES = {
+    "budget_below_per_trade": (
+        _series(1, [10.0 + i for i in range(30)]), {"budget": 500.0},
+        (0, 0)),
+    "zero_price_buy": (_series(1, _ZERO_PRICED), {}, (3, 3)),
+    # 7 rows, max_trades=8: step = max(7 // 8, 1) = 1, so 7 buys < 8
+    "max_trades_above_n_buys": (
+        _series(1, [3.0, 4.0, 2.0, 5.0, 6.0, 1.5, 7.0]),
+        {"max_trades": 8}, (7, 7)),
+    "one_row_series": (
+        _series(1, [42.0]) + _series(2, [8.0]), {"max_trades": 3},
+        (1, 1)),
+    # timestamps tie in runs of 4 and only the descending event_id
+    # orders rows within a run; buys at positions 0, 10 and 20 and the
+    # last row all fall inside tied runs
+    "tied_timestamps_composite_key": (
+        [(1, i // 4, 100 - i, 10.0 + (i * 7) % 13) for i in range(26)],
+        {"order": ("ts", "event_id")}, (3, 3)),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_EVENLY_EDGE_CASES))
+def test_evenly_edge_cases_match_golden(spark, case):
+    rows, kw, expected = _EVENLY_EDGE_CASES[case]
+    budget = kw.get("budget", BUDGET)
+    max_trades = kw.get("max_trades")
+    order = kw.get("order", ("ts",))
+    pdf = pd.DataFrame(rows, columns=["user_id", "ts", "event_id",
+                                      "value"])
+    df = spark.createDataFrame(
+        pdf.sample(frac=1.0, random_state=7),
+        "user_id long, ts long, event_id long, value double")
+    got = {r["user_id"]: r for r in evenly_spaced_backtest(
+        df, symbol_col="user_id", order_col=list(order),
+        price_col="value", budget=budget, per_trade=PER_TRADE,
+        max_trades=max_trades).collect()}
+    assert set(got) == set(pdf["user_id"])
+    for uid, g in pdf.groupby("user_id"):
+        fv, roi = golden_evenly_spaced(g, budget, PER_TRADE, max_trades,
+                                       order=order)
+        r = got[uid]
+        assert (r["n_buys"], r["trades_executed"]) == expected, uid
+        assert r["total_invested"] == expected[1] * PER_TRADE
+        assert r["final_value"] == pytest.approx(fv, rel=1e-12), uid
+        assert r["roi"] == pytest.approx(roi, rel=1e-12, abs=1e-12), uid
+
+
+def test_evenly_is_one_scan_and_one_exchange(ticks):
+    """The backtest is one window pass: the executed plan scans the
+    source once and shuffles once (the per-symbol aggregate reuses the
+    window's hash partitioning; no second scan for the last price, no
+    join)."""
+    import re
+
+    from big_datatrader_spark.plans.explain import physical_plan
+
+    res = evenly_spaced_backtest(
+        ticks, symbol_col="user_id", order_col="ts", price_col="value",
+        budget=BUDGET, per_trade=PER_TRADE)
+    res.collect()
+    final = physical_plan(res).split("== Final Plan ==")[1]
+    final = final.split("== Initial Plan ==")[0]
+    assert len(re.findall(r"\bScan \w+ *\(\d+\)", final)) == 1, final
+    assert len(re.findall(r"\bExchange \(\d+\)", final)) == 1, final
+
+
+# pandas' rolling().mean() and a left-to-right window sum disagree on
+# this series' 24th row: the 5- and 20-bar means tie exactly in decimal
+# (27.23508), pandas rounds them equal, the left-to-right sums give
+# 27.23508 < 27.235080000000004 — so the crossover at the next row
+# differs. Minute bars of a seeded random walk, four-decimal prices.
+_MA_TIE_PRICES = [
+    27.6329, 27.6658, 27.65, 27.5234, 27.3586, 27.3191, 27.1744, 27.2375,
+    27.2264, 27.1294, 27.0715, 27.2027, 27.1529, 27.1164, 27.0932,
+    27.2811, 27.4017, 27.3417, 27.4196, 27.3263, 27.2368, 27.2388,
+    27.163, 27.2105, 27.2513,
+]
+
+
+def test_ma_crossover_modes_agree_at_exact_mean_tie(spark):
+    pdf = pd.DataFrame({"symbol": "SYM", "time": range(len(_MA_TIE_PRICES)),
+                        "close": _MA_TIE_PRICES})
+    df = spark.createDataFrame(pdf, "symbol string, time long, close double")
+    kw = dict(symbol_col="symbol", order_col="time", price_col="close",
+              budget=BUDGET, per_trade=PER_TRADE, emit="positions")
+    full = [tuple(r) for r in ma_crossover_backtest(
+        df, mode="full", **kw).collect()]
+    comp = [tuple(r) for r in ma_crossover_backtest(
+        df, mode="compressed", **kw).collect()]
+    assert full == comp
+    # the death cross lands on the tie row itself (time 23), not after
+    assert [r[3] for r in comp] == [23]
 
 
 def test_ma_crossover_compressed_equals_full(ticks):
